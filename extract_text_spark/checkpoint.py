@@ -16,8 +16,9 @@ Mechanism (SURVEY.md §4.3):
   ``(bucket, status, n_docs, n_spans, n_chars, bytes_in, wall_ms, app_id,
   run_ts)`` is appended to ``{output}/_manifest`` — lineage + extraction
   metrics;
-* resume = left-anti join of the input's buckets against completed manifest
-  buckets: already-done buckets are never re-read past the scan.
+* resume = the input filtered against the completed manifest buckets,
+  collected once up front: already-done buckets are never re-read past the
+  scan.
 
 Crash-safety: the manifest append happens only after the data write
 returns, so a failure mid-write leaves at worst a torn partition that the
@@ -34,9 +35,13 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .config import DEFAULT_NUM_BUCKETS
-from .pipeline import extract_spans_df
+from .pipeline import OUT_SCHEMA, extract_spans_df
+
+_DATA_SCHEMA = StructType(
+    OUT_SCHEMA.fields + [StructField("bucket", IntegerType())])
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -51,6 +56,17 @@ def completed_buckets(spark: SparkSession, output_dir: str) -> DataFrame | None:
         return m.filter(F.col("status") == "done").select("bucket").distinct()
     except Exception:
         return None
+
+
+def _summary(rows: list, wall_ms: int) -> dict:
+    """The processed increment's totals, from its manifest rows."""
+    return {
+        "buckets": len(rows),
+        "docs": sum(r.n_docs for r in rows),
+        "spans": sum(r.n_spans for r in rows),
+        "bytes_in": sum(r.bytes_in for r in rows),
+        "wall_ms": wall_ms,
+    }
 
 
 def run_extraction(
@@ -68,30 +84,28 @@ def run_extraction(
     over ``bucket`` restricting which buckets this invocation processes —
     simulates a killed run that only finished part of the input.
 
+    ``docs`` is read exactly once, so a side-effecting input (a URL fetch,
+    the byte-ingest kernel) runs once per row and needs no persist: the
+    done-bucket set (at most ``num_buckets`` ints) is collected before the
+    write and the input is filtered against that frozen set, and the
+    manifest is built from a partition-pruned read-back of the buckets
+    just written. A ``status`` column on ``docs`` (ingest errors) is
+    carried through to the output.
+
     Returns summary metrics for the processed increment.
     """
     t0 = time.monotonic()
-    docs = with_bucket(docs, num_buckets)
+    done_df = completed_buckets(spark, output_dir) if resume else None
+    done = ({r.bucket for r in done_df.collect()} if done_df is not None
+            else set())
+    if set(range(num_buckets)) <= done:   # nothing left: read nothing
+        return _summary([], int((time.monotonic() - t0) * 1000))
+    todo = ~F.col("bucket").isin(sorted(done))
     if bucket_filter is not None:
-        docs = docs.filter(bucket_filter(F.col("bucket")))
-    if resume:
-        done = completed_buckets(spark, output_dir)
-        if done is not None:
-            docs = docs.join(F.broadcast(done), "bucket", "left_anti")
-
-    # The increment's bucket set stays a DataFrame end-to-end: at 10^5
-    # buckets a collected python list would bloat the manifest plan with a
-    # 10^5-literal IN — the manifest scopes itself with a broadcast
-    # semi-join instead. The only driver action is the emptiness probe
-    # (limit 1): on parquet inputs it is a column-pruned scan, but when
-    # ``docs`` arrives through the byte-ingestion kernel (submit
-    # --input-format binary) the probe does execute that kernel for the
-    # first non-empty partition — one extra kernel invocation, bounded
-    # by the limit, not a full pass.
-    inc_buckets = docs.select("bucket").distinct()
-    if docs.select("bucket").isEmpty():
-        return {"buckets": 0, "docs": 0, "spans": 0, "bytes_in": 0,
-                "wall_ms": int((time.monotonic() - t0) * 1000)}
+        todo = todo & bucket_filter(F.col("bucket"))
+    cols = [c for c in ("doc_id", "spans", "status") if c in docs.columns]
+    docs = with_bucket(docs.select(*cols), num_buckets).filter(todo).drop(
+        "bucket")
 
     # NB: fan-out children land in the *parent's* bucket so bucket-level
     # resume stays exact (children re-derive deterministically from parents).
@@ -99,8 +113,7 @@ def run_extraction(
     # string-splitting the child doc_id would mis-bucket inputs whose own
     # doc_id contains '/'.
     result = extract_spans_df(
-        docs.select("doc_id", "spans"), salt_partitions=salt_partitions,
-        keep_root=True,
+        docs, salt_partitions=salt_partitions, keep_root=True,
     )
     result = result.withColumn(
         "bucket", F.pmod(F.xxhash64("root_id"), F.lit(num_buckets)).cast("int")
@@ -116,10 +129,11 @@ def run_extraction(
     ).parquet(f"{output_dir}/data")
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    written = spark.read.parquet(f"{output_dir}/data")
+    # An explicit schema reads an increment that wrote no rows as empty.
+    written = spark.read.schema(_DATA_SCHEMA).parquet(
+        f"{output_dir}/data").filter(todo)
     manifest = (
-        written.join(F.broadcast(inc_buckets), "bucket", "left_semi")
-        .groupBy("bucket")
+        written.groupBy("bucket")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_spans").alias("n_spans"),
@@ -135,16 +149,10 @@ def run_extraction(
         .withColumn("app_id", F.lit(spark.sparkContext.applicationId))
         .withColumn("run_ts", F.lit(int(time.time() * 1000)))
     )
-    manifest.write.mode("append").parquet(f"{output_dir}/_manifest")
-
-    stats = manifest.agg(
-        F.count("*").alias("buckets"),
-        F.sum("n_docs").alias("docs"),
-        F.sum("n_spans").alias("spans"),
-        F.sum("bytes_in").alias("bytes_in"),
-    ).collect()[0]
-    return {
-        "buckets": stats["buckets"], "docs": stats["docs"],
-        "spans": stats["spans"], "bytes_in": stats["bytes_in"],
-        "wall_ms": wall_ms,
-    }
+    rows = manifest.collect()
+    if rows:
+        # the aggregate's own schema: an inferred bigint bucket must not
+        # meet the int bucket of earlier manifest files
+        spark.createDataFrame(rows, manifest.schema).write.mode(
+            "append").parquet(f"{output_dir}/_manifest")
+    return _summary(rows, wall_ms)

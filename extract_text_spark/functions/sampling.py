@@ -182,8 +182,8 @@ def dsir_sample(df: DataFrame, target: DataFrame, nbuckets: int = 1 << 20,
     ct = (tfeats.groupBy("bucket").agg(F.count("*").cast("long").alias("ct"))
           .persist(StorageLevel.MEMORY_AND_DISK))
     if cache_registry is not None:
-        # the repo's loop-release convention (ingest.release_caches):
-        # per-shard drivers free each call's count tables after the action
+        # per-shard drivers call .unpersist() on each registered table
+        # once the action has run
         cache_registry.extend([cr, ct])
     n_raw = cr.agg(F.sum("cr")).collect()[0][0] or 0
     n_tgt = ct.agg(F.sum("ct")).collect()[0][0] or 0

@@ -765,58 +765,11 @@ def ingest_bytes_df(df: DataFrame, validate: bool = False) -> DataFrame:
 
 
 def extract_from_bytes(df: DataFrame, validate: bool = False,
-                       materialize: bool = True,
-                       cache_registry: list | None = None,
                        **extract_kwargs) -> DataFrame:
     """Full byte-ingest pipeline: parse containers -> JVM fan-out ->
-    extraction kernel (pipeline.extract_spans_df).
-
-    The ingest output is persisted (MEMORY_AND_DISK) before the
-    extraction pipeline's small/big path split: both paths consume it,
-    and without the materialization barrier every container would be
-    PARSED once per path — 2x the ingest-kernel cost for nothing.
-    ``materialize=False`` skips the persist — long-running streaming
-    sinks call this per micro-batch, where an unbounded pile of cached
-    batches is worse than a bounded per-batch double parse.
-
-    Releasing the cache: looping drivers pass ``cache_registry=`` (any
-    list they own) — the persisted handle is appended to it, and
-    ``release_caches(registry)`` frees every job's raw-byte cache after
-    the consuming action. The handle also rides on the RETURNED
-    DataFrame as ``result.ingest_cache`` for one-shot callers, but note
-    that is a plain Python attribute: any transformation
-    (``result.select(...)``) returns a new object without it, which is
-    exactly why loops should own the registry instead."""
+    extraction kernel (pipeline.extract_spans_df). The extraction stream
+    consumes the ingest output exactly once, so each container is parsed
+    once and nothing is persisted."""
     from .pipeline import extract_spans_df
-    ing = ingest_bytes_df(df, validate=validate)
-    if materialize:
-        from pyspark import StorageLevel
-        ing = ing.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_registry is not None:
-            cache_registry.append(ing)
-    out = extract_spans_df(ing, **extract_kwargs)
-    if materialize:
-        out.ingest_cache = ing
-    return out
-
-
-def release_ingest_cache(result: DataFrame) -> None:
-    """Unpersist the cached ingest output riding on an
-    ``extract_from_bytes`` / ``extract_from_urls`` result (no-op for
-    results without one — including any TRANSFORMED result, which loses
-    the attribute; loops should use ``cache_registry=`` +
-    ``release_caches``). Call after the consuming action; the result
-    stays valid — a re-run just re-parses."""
-    ing = getattr(result, "ingest_cache", None)
-    if ing is not None:
-        ing.unpersist()
-
-
-def release_caches(registry: list) -> None:
-    """Unpersist every handle collected via ``cache_registry=`` and
-    clear the list — the loop-safe release: transformations on a result
-    discard its ``.ingest_cache`` attribute, but the registry the CALLER
-    owns survives any downstream plan shaping."""
-    for ing in registry:
-        ing.unpersist()
-    registry.clear()
+    return extract_spans_df(ingest_bytes_df(df, validate=validate),
+                            **extract_kwargs)

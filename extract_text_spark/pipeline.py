@@ -5,17 +5,23 @@ Stages (all declarative except the extraction kernel itself):
 1. **Archive fan-out** — ≤3 bounded rounds of pure Catalyst ops
    (``from_json`` + ``explode`` + regexp path sanitation + guard filters),
    reproducing A1-A8 of SURVEY.md §2.3 JVM-side with no Python.
-2. **Skew split** — documents above ``SKEW_SPLIT_BYTES`` whose spans are all
-   page-independent (``pdf_page``/``media``) are split into span chunks
-   (window-function chunk ids that keep a media span glued to its preceding
-   page), extracted as independent rows, and reassembled order-preserving
-   with ``collect_list`` — the oversized-PDF skew rule of the north star.
-3. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id), P))``
-   spreads hot doc_ids; with AQE on, post-shuffle coalescing keeps small
-   runs tight.
-4. **Extraction kernel** — Arrow-batched ``mapInPandas`` (iterator form)
-   running ``extractors.extract_document`` per row; never per-row Python
-   UDFs, no driver-side collects.
+2. **Span chunks** — every fanned row becomes an array of span chunks,
+   built in-row with higher-order functions: the whole doc is one chunk
+   unless it is above ``SKEW_SPLIT_BYTES`` and all its spans are
+   page-independent (``pdf_page``/``media``); such a doc gets
+   ``SKEW_CHUNK_SPANS`` pages per chunk, each media span glued to its
+   preceding page. ``posexplode`` turns chunks into rows — the
+   oversized-PDF skew rule of the north star, with no shuffle.
+3. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id,
+   chunk_id), P))`` spreads hot doc_ids and a whale's chunks across
+   tasks; with AQE on, post-shuffle coalescing keeps small runs tight.
+4. **Extraction kernel** — ONE Arrow-batched ``mapInPandas`` (iterator
+   form) running ``extractors.extract_document`` once per chunk row;
+   never per-row Python UDFs, no driver-side collects.
+5. **Reassembly** — one ``groupBy(doc_id)`` over the kernel output:
+   single-chunk entries pass through, a split doc's chunks merge back
+   order-preserving. The input is consumed exactly once, so nothing is
+   persisted.
 
 The output schema is
 ``(doc_id, status, spans array<struct<kind,text,media_ref,offset>>,
@@ -252,16 +258,20 @@ def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
 # Extraction kernel as Arrow-batched mapInPandas
 # ---------------------------------------------------------------------------
 
+
+_KERNEL_IN = ("doc_id", "spans", "status")
+
+
 def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    """Extract every row of every batch. Columns beyond (doc_id, spans,
+    status) — root_id, chunk_id, n_chunks — ride through unchanged."""
     import pandas as pd
 
     from .extractors import extract_document
 
     for batch in batches:
         rows = []
-        for doc_id, spans, status in zip(
-            batch["doc_id"], batch["spans"], batch["status"]
-        ):
+        for doc_id, spans, status in zip(*(batch[c] for c in _KERNEL_IN)):
             if status is not None and not (isinstance(status, float)):
                 rows.append((doc_id, status, [], 0, 0, 0))
                 continue
@@ -270,10 +280,9 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
             st, out = extract_document(doc_id, span_dicts)
             n_chars = sum(len(s["text"] or "") for s in out if s["text"])
             rows.append((doc_id, st, out, len(out), n_chars, bytes_in))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "status", "spans", "n_spans", "n_chars", "bytes_in"],
-        )
+        out = pd.DataFrame(rows, columns=OUT_SCHEMA.fieldNames())
+        extra = batch.drop(columns=list(_KERNEL_IN)).reset_index(drop=True)
+        yield pd.concat([out, extra], axis=1)
 
 
 def _splittable_col(threshold: int):
@@ -293,101 +302,85 @@ def _splittable_col(threshold: int):
     )
 
 
-def _chunk_big(big: DataFrame, with_root: bool = False) -> DataFrame:
-    """Span-chunk oversized docs; adds (chunk_id, n_chunks)."""
-    from pyspark.sql.window import Window
+def _chunk_rows(fanned: DataFrame, threshold: int) -> DataFrame:
+    """One row per span chunk, adding ``(chunk_id, n_chunks)``.
 
-    root_sel = ["root_id"] if with_root else []
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    exploded = (
-        big.select("doc_id", "status", *root_sel,
-                   F.posexplode("spans").alias("pos", "span"))
-        .withColumn(
-            "anchor",
-            F.sum(
-                F.when(F.col("span.kind") != "media", 1).otherwise(0)
-            ).over(w) - 1,
-        )
-        .withColumn("chunk_id", (F.greatest(F.col("anchor"), F.lit(0))
-                                 / SKEW_CHUNK_SPANS).cast(IntegerType()))
+    A doc is one chunk unless ``_splittable_col`` holds. A split doc gets
+    ``SKEW_CHUNK_SPANS`` payload spans per chunk, each media span staying
+    with the page before it: chunk c starts at the (c*K)-th non-media span
+    (chunk 0 at position 0) and ends where chunk c+1 starts. Built in-row
+    with higher-order functions — no shuffle. The anchor positions and
+    chunk count are real columns because Catalyst does not CSE inside
+    lambdas."""
+    k = SKEW_CHUNK_SPANS
+    anchors = F.filter(
+        F.transform("spans", lambda s, i: F.when(s.kind != "media", i)),
+        lambda i: i.isNotNull(),
     )
-    aggs = [
-        F.array_sort(F.collect_list(F.struct("pos", "span"))).alias("ps"),
-        F.first("status").alias("status"),
-    ]
-    if with_root:
-        aggs.append(F.first("root_id").alias("root_id"))
-    chunks = (
-        exploded.groupBy("doc_id", "chunk_id")
-        .agg(*aggs)
-        .withColumn("spans", F.transform("ps", lambda x: x.span))
-        .withColumn(
-            "n_chunks",
-            F.count("*").over(Window.partitionBy("doc_id")).cast(IntegerType()),
-        )
-        .select("doc_id", "spans", "status", *root_sel, "chunk_id", "n_chunks")
+    a, n = F.col("_anchors"), F.col("n_chunks")
+
+    def start(c):  # 1-based position of chunk c's first span
+        return F.when(c == 0, 1).otherwise(F.element_at(a, c * k + 1) + 1)
+
+    chunks = F.when(n == 1, F.array("spans")).otherwise(F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda c: F.slice("spans", start(c), F.when(
+            c == n - 1, F.size("spans") + 1).otherwise(start(c + 1)) - start(c)),
+    ))
+    keep = [c for c in fanned.columns if c != "spans"]
+    return (
+        fanned.withColumn("_anchors", F.when(_splittable_col(threshold), anchors))
+        .withColumn("n_chunks", F.when(a.isNull(), 1).otherwise(
+            F.greatest(F.ceil(F.size(a) / k), F.lit(1))).cast(IntegerType()))
+        .select(*keep, "n_chunks", F.posexplode(chunks).alias("chunk_id", "spans"))
     )
-    return chunks
 
 
-def _reassemble(multi: DataFrame, with_root: bool = False) -> DataFrame:
-    """Merge chunked extraction outputs back into whole documents.
+def _reassemble(out: DataFrame) -> DataFrame:
+    """One ``groupBy(doc_id)`` over the kernel output: single-chunk entries
+    pass through unchanged, the chunks of split docs merge back into one
+    document, order-preserving.
 
     Error contract matches the unsplit kernel (extract_document): any
     erroring chunk poisons the whole document — empty spans, zero
     n_spans/n_chars — so split and unsplit paths are indistinguishable
     (bytes_in stays the summed input size, as in the unsplit error row).
     """
-    aggs = [
-        F.array_sort(
-            F.collect_list(F.struct("chunk_id", "spans"))
-        ).alias("cs"),
-        F.max(F.when(F.col("status").startswith("error"), F.col("status"))).alias("err"),
-        F.max(F.when(F.col("status") == "ok", F.lit(1)).otherwise(0)).alias("any_ok"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.sum("bytes_in").alias("bytes_in"),
-    ]
-    if with_root:
-        aggs.append(F.first("root_id").alias("root_id"))
-    merged = (
-        multi.groupBy("doc_id")
-        .agg(*aggs)
-        .withColumn(
-            "flat",
-            F.when(F.col("err").isNotNull(),
-                   F.array().cast(SPANS_TYPE.simpleString()))
-            .otherwise(F.flatten(F.transform("cs", lambda c: c.spans))),
-        )
-        .withColumn(
-            "spans",
-            F.transform(
-                "flat",
-                lambda s, i: F.struct(
-                    s.kind.alias("kind"), s.text.alias("text"),
-                    s.media_ref.alias("media_ref"),
-                    i.cast(IntegerType()).alias("offset"),
-                ),
-            ),
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("err").isNotNull(), F.col("err"))
-            .when(F.col("any_ok") == 1, F.lit("ok"))
-            .otherwise(F.lit("empty")),
-        )
-        .withColumn("n_spans", F.size("spans"))
-        .withColumn(
-            "n_chars",
-            F.when(F.col("err").isNotNull(), F.lit(0).cast(LongType()))
-            .otherwise(F.col("sum_chars")),
-        )
-        .select("doc_id", "status", "spans", "n_spans", "n_chars", "bytes_in",
-                *(["root_id"] if with_root else []))
+    fields = [c for c in out.columns if c not in ("doc_id", "chunk_id", "n_chunks")]
+    zero = F.lit(0).cast(LongType())
+
+    def total(name, init=zero):
+        return F.aggregate("parts", init, lambda acc, c: acc + c[name])
+
+    err = F.col("err")
+    flat = F.when(err.isNotNull(), F.array().cast(SPANS_TYPE.simpleString())) \
+        .otherwise(F.flatten(F.transform("parts", lambda c: c.spans)))
+    merged = {
+        "status": F.when(err.isNotNull(), err)
+        .when(F.exists("parts", lambda c: c.status == "ok"), F.lit("ok"))
+        .otherwise(F.lit("empty")),
+        "spans": F.transform(flat, lambda s, i: F.struct(
+            s.kind.alias("kind"), s.text.alias("text"),
+            s.media_ref.alias("media_ref"), i.alias("offset"))),
+        "n_spans": F.when(err.isNotNull(), 0).otherwise(total("n_spans", F.lit(0))),
+        "n_chars": F.when(err.isNotNull(), zero).otherwise(total("n_chars")),
+        "bytes_in": total("bytes_in"),
+        "root_id": F.element_at("parts", 1).root_id,
+    }
+    whole = F.transform(F.filter("cs", lambda c: c.n_chunks == 1),
+                        lambda c: F.struct(*[c[f].alias(f) for f in fields]))
+    split = F.when(F.size("parts") > 0,
+                   F.struct(*[merged[f].alias(f) for f in fields]))
+    return (
+        out.groupBy("doc_id")
+        .agg(F.collect_list(F.struct("chunk_id", "n_chunks", *fields)).alias("cs"))
+        .withColumn("parts", F.array_sort(F.filter("cs", lambda c: c.n_chunks > 1)))
+        .withColumn("err", F.array_max(F.transform(
+            "parts", lambda c: F.when(c.status.startswith("error"), c.status))))
+        .select("doc_id", F.explode(F.filter(
+            F.concat(whole, F.array(split)), lambda d: d.isNotNull())).alias("d"))
+        .select("doc_id", *[f"d.{f}" for f in fields])
     )
-    return merged
-
-
-_ROOT_FIELD = StructField("root_id", StringType())
 
 
 def extract_spans_df(
@@ -399,85 +392,29 @@ def extract_spans_df(
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted spans DataFrame (OUT_SCHEMA).
 
-    The small/big split happens *before* the Python kernel, so every row
-    pays the Arrow/Python cost exactly once: the bulk path is
-    scan -> (salt shuffle) -> kernel with no post-kernel reshaping, and only
-    oversized docs take the chunk -> kernel -> collect_list reassembly
-    detour. (A post-kernel filter-into-union would re-run the kernel per
-    branch — 2x the Python work.)
+    One stream: fan-out -> span chunks per row -> (salt shuffle) -> ONE
+    kernel call per chunk row -> reassembly. Every row pays the Arrow /
+    Python cost exactly once and the input is consumed exactly once, so
+    nothing is persisted. Splitting after the kernel instead (filter into
+    two branches) would re-run the kernel per branch.
 
-    ``keep_root=True`` appends a ``root_id`` column: the pre-fan-out input
-    doc_id (== doc_id for non-archive rows). Only keep_root callers
-    (checkpointing) pay the carry cost — the default path is byte-identical
-    to the plain 3-column kernel plan.
+    ``skew_split=False`` skips chunking and reassembly: scan -> (salt) ->
+    kernel. ``keep_root=True`` appends a ``root_id`` column: the
+    pre-fan-out input doc_id (== doc_id for non-archive rows).
     """
-    fanned = explode_archives_df(df, with_root=keep_root)
-    root_sel = ["root_id"] if keep_root else []
-
-    # Salt BEFORE the small/big routing filters: both branches then hang
-    # off ONE identical Exchange subtree, which Spark executes once and
-    # wires into the second branch as a ReusedExchange — the former
-    # shape (filter first, salt the small branch only) re-scanned and
-    # re-fanned the ENTIRE corpus a second time just to find the rare
-    # oversized docs (guide §2.4; ~27% of headline wall at sf-bench).
-    # Filter/repartition commute row-wise, so kernel inputs and outputs
-    # are identical; the split predicate is evaluated once per row per
-    # branch post-exchange, which is noise next to a full re-scan.
-    if salt_partitions:
-        fanned = fanned.repartition(
-            salt_partitions, F.pmod(F.xxhash64("doc_id"), F.lit(salt_partitions))
-        )
-
+    rows = explode_archives_df(df, with_root=keep_root)
     if skew_split:
-        from pyspark.storagelevel import StorageLevel
-        if salt_partitions:
-            fanned = fanned.persist(StorageLevel.MEMORY_AND_DISK)
-        split = _splittable_col(skew_threshold)
-        small = fanned.filter(~split)
-        big = fanned.filter(split)
-    else:
-        small, big = fanned, None
-
-    def _meta_wrapped(meta_cols: list[str]):
-        def run(batches):
-            import pandas as pd
-            for batch in batches:
-                meta = batch[meta_cols].reset_index(drop=True)
-                res = next(_extract_batches(iter([batch]))).reset_index(drop=True)
-                yield pd.concat([res, meta], axis=1)
-        return run
-
+        rows = _chunk_rows(rows, skew_threshold)
+    if salt_partitions:
+        # (doc_id, chunk_id): a whale's chunks spread across tasks
+        key = F.xxhash64("doc_id", *(["chunk_id"] if skew_split else []))
+        rows = rows.repartition(salt_partitions,
+                                F.pmod(key, F.lit(salt_partitions)))
+    extra = [f for f in rows.schema.fields if f.name not in _KERNEL_IN]
+    out = rows.mapInPandas(_extract_batches,
+                           schema=StructType(OUT_SCHEMA.fields + extra))
+    if skew_split:
+        out = _reassemble(out)
     if keep_root:
-        small_schema = StructType(OUT_SCHEMA.fields + [_ROOT_FIELD])
-        out_small = small.select(
-            "doc_id", "spans", "status", "root_id"
-        ).mapInPandas(_meta_wrapped(["root_id"]), schema=small_schema)
-    else:
-        out_small = small.select("doc_id", "spans", "status").mapInPandas(
-            _extract_batches, schema=OUT_SCHEMA
-        )
-
-    def _finish(out: DataFrame) -> DataFrame:
-        if keep_root:
-            return out.withColumn("root_id", F.coalesce("root_id", "doc_id"))
-        return out
-
-    if big is None:
-        return _finish(out_small)
-
-    # Oversized docs: chunk (already a shuffle by doc_id+chunk), extract
-    # each chunk independently, reassemble order-preserving.
-    chunks = _chunk_big(big, with_root=keep_root)
-    out_schema = StructType(
-        OUT_SCHEMA.fields
-        + [StructField("chunk_id", IntegerType()),
-           StructField("n_chunks", IntegerType())]
-        + ([_ROOT_FIELD] if keep_root else [])
-    )
-    out_big = chunks.select(
-        "doc_id", "spans", "status", "chunk_id", "n_chunks", *root_sel
-    ).mapInPandas(
-        _meta_wrapped(["chunk_id", "n_chunks", *root_sel]), schema=out_schema
-    )
-    return _finish(
-        out_small.unionByName(_reassemble(out_big, with_root=keep_root)))
+        out = out.withColumn("root_id", F.coalesce("root_id", "doc_id"))
+    return out

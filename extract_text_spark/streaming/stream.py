@@ -8,8 +8,8 @@ a continuously-ingesting extraction job:
   parquet sink with a streaming checkpoint. Exactly-once per input file via
   the file-source offset log + sink commit log: re-running with the same
   checkpoint emits nothing new. ``skew_split=True`` routes each micro-batch
-  through ``foreachBatch`` so the full batch skew machinery (window-ranked
-  span chunking + reassembly — both unsupported on streaming DataFrames)
+  through ``foreachBatch`` so the full batch skew machinery (span chunking
+  + the reassembly ``groupBy``, which an append-mode stream cannot run)
   runs per trigger; exactly-once is preserved by writing every batch into
   its own ``batch_id=N`` partition with dynamic overwrite, so a replayed
   batch REPLACES its partition instead of appending duplicates.
@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..pipeline import DOC_SCHEMA, OUT_SCHEMA, explode_archives_df, _extract_batches
+from ..pipeline import DOC_SCHEMA, extract_spans_df
 
 SESSION_GAP_S = 1800
 
@@ -75,26 +75,16 @@ def stream_extract_spans(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(input_path)
-    if skew_split:
-        from ..pipeline import extract_spans_df
-        kwargs = {} if skew_threshold is None else {
-            "skew_threshold": skew_threshold}
-        writer = docs.writeStream.foreachBatch(_skew_safe_sink(
-            output_path,
-            lambda b: extract_spans_df(b.select("doc_id", "spans"),
-                                       skew_split=True, **kwargs),
-        )).option("checkpointLocation", checkpoint_path)
-    else:
-        fanned = explode_archives_df(docs)
-        out = fanned.select("doc_id", "spans", "status").mapInPandas(
-            _extract_batches, schema=OUT_SCHEMA
-        )
-        writer = (
-            out.writeStream.format("parquet")
-            .option("path", output_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode("append")
-        )
+    if not skew_split:
+        return _start_span_sink(docs, output_path, checkpoint_path,
+                                available_now)
+    kwargs = {} if skew_threshold is None else {
+        "skew_threshold": skew_threshold}
+    writer = docs.writeStream.foreachBatch(_skew_safe_sink(
+        output_path,
+        lambda b: extract_spans_df(b.select("doc_id", "spans"),
+                                   skew_split=True, **kwargs),
+    )).option("checkpointLocation", checkpoint_path)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -145,8 +135,7 @@ def stream_extract_files(
         writer = named.writeStream.foreachBatch(_skew_safe_sink(
             output_path,
             lambda b: extract_from_bytes(b, validate=validate,
-                                         skew_split=True,
-                                         materialize=False, **kwargs),
+                                         skew_split=True, **kwargs),
         )).option("checkpointLocation", checkpoint_path)
         if available_now:
             writer = writer.trigger(availableNow=True)
@@ -160,10 +149,7 @@ def _start_span_sink(ingested: DataFrame, output_path: str,
     """Shared streaming tail: span-model docs -> JVM fan-out -> extraction
     kernel -> append parquet sink. One place owns the sink shape for every
     streaming source (files, URLs, span tables)."""
-    fanned = explode_archives_df(ingested)
-    out = fanned.select("doc_id", "spans", "status").mapInPandas(
-        _extract_batches, schema=OUT_SCHEMA
-    )
+    out = extract_spans_df(ingested, skew_split=False)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_path)

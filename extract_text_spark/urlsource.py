@@ -430,30 +430,14 @@ def ingest_urls_df(df: DataFrame, fetch, url_col: str = "url",
     return src.mapInPandas(kernel, schema=_URL_SCHEMA)
 
 
-def extract_from_urls(df: DataFrame, fetch,
-                      cache_registry: list | None = None,
-                      **kwargs) -> DataFrame:
+def extract_from_urls(df: DataFrame, fetch, **kwargs) -> DataFrame:
     """Full URL pipeline: validate+fetch+route -> JVM fan-out ->
-    extraction kernel, mirroring ingest.extract_from_bytes.
-
-    The ingest output is persisted (MEMORY_AND_DISK) before the
-    extraction pipeline's small/big path split: both paths consume it,
-    and without the materialization barrier each URL would be FETCHED
-    once per path — wrong for a side-effecting network tier, and 2x the
-    kernel cost. The cache is not released here (the result is lazy):
-    looping drivers pass ``cache_registry=`` and free each job via
-    ``ingest.release_caches(registry)``; the handle also rides on the
-    untouched result as ``result.ingest_cache`` for one-shot callers
-    (a plain attribute — lost on any transformation)."""
-    from pyspark import StorageLevel
+    extraction kernel, mirroring ingest.extract_from_bytes. The extraction
+    stream consumes the ingest output exactly once, so each URL is fetched
+    once per action — side-effecting network tiers rely on that."""
     from .pipeline import extract_spans_df
     ingest_kwargs = {k: kwargs.pop(k) for k in
                      ("url_col", "user_agent", "resolver", "process_images",
                       "partitions") if k in kwargs}
-    ing = ingest_urls_df(df, fetch, **ingest_kwargs).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(ing)
-    out = extract_spans_df(ing, **kwargs)
-    out.ingest_cache = ing
-    return out
+    return extract_spans_df(ingest_urls_df(df, fetch, **ingest_kwargs),
+                            **kwargs)

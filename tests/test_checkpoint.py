@@ -20,29 +20,64 @@ def _result_map(spark, out_dir):
     }
 
 
-def test_partial_then_resume_equals_oneshot(spark, tmp_path):
+def _partial_then_resume(spark, tmp_path, salt):
     docs = corpus_to_df(spark, gen_corpus(80, seed=5))
     one, two = str(tmp_path / "oneshot"), str(tmp_path / "resumed")
 
-    run_extraction(spark, docs, one, num_buckets=8)
+    run_extraction(spark, docs, one, num_buckets=8, salt_partitions=salt)
 
     # "Killed" run: only even buckets complete.
-    m1 = run_extraction(spark, docs, two, num_buckets=8,
+    m1 = run_extraction(spark, docs, two, num_buckets=8, salt_partitions=salt,
                         bucket_filter=lambda b: b % 2 == 0)
     assert m1["buckets"] <= 4
     done = completed_buckets(spark, two)
     assert done is not None and done.count() == m1["buckets"]
+    done = [r.bucket for r in done.collect()]
 
-    # Resume: processes only the remaining buckets.
-    m2 = run_extraction(spark, docs, two, num_buckets=8)
+    # Resume: processes only the remaining buckets, and its summary counts
+    # exactly the increment it wrote.
+    m2 = run_extraction(spark, docs, two, num_buckets=8, salt_partitions=salt)
     assert m2["buckets"] == 8 - m1["buckets"]
+    inc = spark.read.parquet(f"{two}/data").filter(~F.col("bucket").isin(done))
+    got = inc.agg(F.countDistinct("bucket").alias("buckets"),
+                  F.count("*").alias("docs"),
+                  F.sum("n_spans").alias("spans")).first()
+    assert (m2["buckets"], m2["docs"], m2["spans"]) == tuple(got)
 
     assert _result_map(spark, two) == _result_map(spark, one)
 
     # Third run: everything checkpointed -> no work, no duplicates.
-    m3 = run_extraction(spark, docs, two, num_buckets=8)
+    m3 = run_extraction(spark, docs, two, num_buckets=8, salt_partitions=salt)
     assert m3["buckets"] == 0 and m3["docs"] == 0
     assert _result_map(spark, two) == _result_map(spark, one)
+
+
+def test_partial_then_resume_equals_oneshot(spark, tmp_path):
+    _partial_then_resume(spark, tmp_path, salt=None)
+
+
+def test_partial_then_resume_equals_oneshot_salted(spark, tmp_path):
+    _partial_then_resume(spark, tmp_path, salt=4)
+
+
+def test_ingest_error_status_survives_run_extraction(spark, tmp_path):
+    """An ingest error (a corrupt PDF off the byte-ingest kernel) reaches
+    the output as its error status, not as 'empty', and counts in the
+    manifest's n_errors."""
+    from extract_text_spark.ingest import ingest_bytes_df
+    files = spark.createDataFrame(
+        [("bad.pdf", "bad.pdf", b"%PDF-1.4 garbage"),
+         ("good.txt", "good.txt", b"plain words")],
+        "doc_id string, filename string, content binary")
+    out = str(tmp_path / "out")
+    run_extraction(spark, ingest_bytes_df(files), out, num_buckets=4)
+    got = {r.doc_id: r.status
+           for r in spark.read.parquet(f"{out}/data").collect()}
+    assert got == {
+        "bad.pdf": "error: Error processing PDF: no PDF objects found",
+        "good.txt": "ok"}
+    m = spark.read.parquet(f"{out}/_manifest")
+    assert m.agg(F.sum("n_errors")).first()[0] == 1
 
 
 def test_rerun_overwrites_not_duplicates(spark, tmp_path):

@@ -452,22 +452,26 @@ def test_extract_from_bytes_end_to_end(spark):
     assert "d1/__MACOSX/._x" not in out
 
 
-def test_extract_from_bytes_cache_handle_release(spark):
-    """The persisted ingest output rides on the result as .ingest_cache;
-    release_ingest_cache unpersists just that job's cache (looping
-    drivers must not need spark.catalog.clearCache())."""
-    from extract_text_spark.ingest import release_ingest_cache
-    rows = [("d1", "plain.txt", b"some text")]
-    out = extract_from_bytes(_bytes_df(spark, rows))
-    assert out.ingest_cache.storageLevel.useMemory
-    out.count()
-    release_ingest_cache(out)
-    assert not out.ingest_cache.storageLevel.useMemory
-    release_ingest_cache(out.limit(1))  # no handle -> no-op, no raise
-    # materialize=False -> no handle at all
-    assert not hasattr(
-        extract_from_bytes(_bytes_df(spark, rows), materialize=False),
-        "ingest_cache")
+def test_nothing_stays_persisted(spark, tmp_path):
+    """The extraction stream consumes its input exactly once, so no route
+    persists anything: no cached RDD survives a checkpointed run over
+    byte-ingest input, an extract_from_bytes action or a salted
+    skew-split action."""
+    from extract_text_spark.checkpoint import run_extraction
+    from extract_text_spark.corpus import corpus_to_df, gen_corpus
+    from extract_text_spark.pipeline import extract_spans_df
+    spark.catalog.clearCache()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    rows = [("d1", "plain.txt", b"some text"),
+            ("d2", "a.zip", make_zip({"x.txt": b"member text"}))]
+    run_extraction(spark, ingest_bytes_df(_bytes_df(spark, rows)),
+                   str(tmp_path / "out"), num_buckets=4)
+    assert persisted().isEmpty()
+    assert len(extract_from_bytes(_bytes_df(spark, rows)).collect()) == 2
+    assert persisted().isEmpty()
+    docs = corpus_to_df(spark, gen_corpus(40, seed=7))
+    extract_spans_df(docs, salt_partitions=4, skew_threshold=1).collect()
+    assert persisted().isEmpty()
 
 
 def test_ingest_validate_quarantines(spark):
@@ -871,21 +875,3 @@ def test_vendored_7z_declared_size_cap_fires_before_decode():
     with pytest.raises(ValueError, match="zip bomb protection"):
         sevenz_members(z, max_total=1024)
     assert sevenz_members(z, max_total=10**9)[0][1] == b"A" * 100_000
-
-
-def test_cache_registry_survives_transformations(spark):
-    """The loop-safe release path: .ingest_cache is a plain attribute and
-    any transformation discards it, but a caller-owned cache_registry
-    keeps the handle, so release_caches frees the persisted ingest even
-    when the driver only ever held a derived DataFrame."""
-    from extract_text_spark.ingest import release_caches
-    rows = [("d1", "plain.txt", b"some text")]
-    reg: list = []
-    derived = extract_from_bytes(_bytes_df(spark, rows),
-                                 cache_registry=reg).select("doc_id")
-    assert not hasattr(derived, "ingest_cache")   # attribute gone
-    assert len(reg) == 1 and reg[0].storageLevel.useMemory
-    derived.count()
-    handle = reg[0]
-    release_caches(reg)
-    assert not handle.storageLevel.useMemory and reg == []

@@ -73,10 +73,10 @@ def test_skew_split_equivalence(spark):
 
 
 def test_skew_split_salted_persist_path_equivalence(spark):
-    """salt_partitions + skew_split is the single-scan persist route (the
-    fanned table is materialized once and BOTH branches read the cache):
-    with a forced-big threshold the output must still equal the unsplit
-    and the unsalted-split runs exactly."""
+    """salt_partitions + skew_split salts by (doc_id, chunk_id), so a
+    whale's chunks land in different tasks before reassembly: with a
+    forced-big threshold the output must still equal the unsplit and the
+    unsalted-split runs exactly."""
     corpus = gen_corpus(400, seed=7)
     docs = ([d for d in corpus if d["doc_id"].endswith("-skew")]
             + [d for d in corpus if not d["doc_id"].endswith("-skew")][:40])
@@ -115,6 +115,39 @@ def test_skew_split_equivalence_with_erroring_chunk(spark):
     assert st.startswith("error:") and spans == []
     row = extract_spans_df(df, skew_split=True, skew_threshold=1).collect()[0]
     assert row["n_spans"] == 0 and row["n_chars"] == 0
+
+
+def test_duplicate_doc_ids_stay_separate_rows_on_every_route(spark):
+    """Input rows sharing a doc_id that are not split (plain docs, and a
+    one-chunk PDF even under a forced-big threshold) come out as separate
+    rows on every route: the reassembly groupBy over all rows must pass
+    single-chunk entries through, never merge them."""
+    def page(i, text):
+        return {"kind": "pdf_page", "media_ref": None, "offset": i,
+                "text": '{"page_no": %d, "blocks": [{"bbox": [0, 0, 10, 5], '
+                        '"text": "%s"}]}' % (i + 1, text)}
+
+    def plain(text):
+        return {"kind": "plain", "text": text, "media_ref": None, "offset": 0}
+
+    docs = [{"doc_id": "dup", "spans": [plain("first body")]},
+            {"doc_id": "dup", "spans": [plain("second body")]},
+            {"doc_id": "pdf", "spans": [page(0, "one"), page(1, "two")]},
+            {"doc_id": "pdf", "spans": [page(0, "three")]},
+            {"doc_id": "solo", "spans": [plain("alone")]}]
+    df = corpus_to_df(spark, docs)
+
+    def rows(**kwargs):
+        return sorted(
+            (r["doc_id"], r["status"], tuple(s["text"] for s in r["spans"]))
+            for r in extract_spans_df(df, **kwargs).collect())
+
+    ref = rows(skew_split=False)
+    assert [r[0] for r in ref] == ["dup", "dup", "pdf", "pdf", "solo"]
+    for kwargs in ({"skew_split": True}, {"skew_threshold": 1},
+                   {"salt_partitions": 4},
+                   {"salt_partitions": 4, "skew_threshold": 1}):
+        assert rows(**kwargs) == ref, kwargs
 
 
 def test_archive_fanout_matches_oracle(spark):

@@ -237,10 +237,14 @@ def test_spans_from_url_page_then_images_order():
     assert "big.gif" in out[1]["media_ref"]
 
 
-def test_each_url_fetched_exactly_once_through_full_pipeline(spark):
-    """The extraction pipeline's small/big path split consumes the ingest
-    output twice; without the materialization barrier every URL would be
-    FETCHED once per path. Pin fetch-count == url-count via accumulator."""
+def test_each_url_fetched_exactly_once_through_full_pipeline(spark, tmp_path):
+    """Every route consumes the ingest output exactly once, so each action
+    fetches every URL once: the plain route, the salted skew route, and a
+    checkpointed run and its resume. (A resumed run fetches every URL
+    again: the bucket is derived from the doc_id the fetch kernel emits.)
+    Pin fetch-count == url-count per action via accumulator."""
+    from extract_text_spark.checkpoint import run_extraction
+    from extract_text_spark.urlsource import ingest_urls_df
     acc = spark.sparkContext.accumulator(0)
 
     def counting_fetch(url, ua):
@@ -249,13 +253,31 @@ def test_each_url_fetched_exactly_once_through_full_pipeline(spark):
                 "headers": {"content-type": "text/plain"},
                 "content": b"payload body"}
 
+    def resolver(host):
+        return ["93.184.216.34"]
+
+    def fetches(action):
+        before = acc.value
+        result = action()
+        return result, acc.value - before
+
     urls = spark.createDataFrame(
         [(f"http://site.example/d{i}.txt",) for i in range(40)],
         "url string")
-    out = extract_from_urls(urls, counting_fetch,
-                            resolver=lambda h: ["93.184.216.34"])
-    assert out.count() == 40
-    assert acc.value == 40, f"fetched {acc.value} times for 40 urls"
+    for kwargs in ({}, {"salt_partitions": 4, "skew_threshold": 1}):
+        out = extract_from_urls(urls, counting_fetch, resolver=resolver,
+                                **kwargs)
+        assert fetches(out.count) == (40, 40), kwargs
+
+    out_dir = str(tmp_path / "out")
+
+    def run(**kwargs):
+        run_extraction(spark, ingest_urls_df(urls, counting_fetch,
+                                             resolver=resolver),
+                       out_dir, num_buckets=4, **kwargs)
+    assert fetches(lambda: run(bucket_filter=lambda b: b < 2))[1] == 40
+    assert fetches(run)[1] == 40
+    assert spark.read.parquet(f"{out_dir}/data").count() == 40
 
 
 def test_media_ref_is_valid_json_with_hostile_names():

@@ -83,10 +83,19 @@ def main():
     ])
 
     pipe = extract_spans_df(_docs_as_span_table(spark, SF), salt_partitions=8)
-    add("full extraction pipeline — one Python stage per path", pipe, [
-        ("Arrow-batched kernel (MapInPandas / ArrowEvalPython)",
-         r"MapInPandas|FlatMapGroupsInPandas|PythonMapInArrow"),
+
+    def tree_count(op: str, n: int):
+        # count in the plan TREE only (the detail appendix repeats nodes)
+        return lambda t: t.split("\n\n(1)")[0].count(op) == n
+    add("full extraction pipeline — one stream, one kernel call per chunk "
+        "row", pipe, [
+        ("exactly one Arrow-batched kernel (MapInPandas)",
+         tree_count("MapInPandas", 1)),
         ("salted exchange before the kernel", r"hashpartitioning\(pmod"),
+        ("nothing persisted (no InMemoryRelation)",
+         lambda t: "InMemoryRelation" not in t),
+        ("span chunks built in-row (no Window)", lambda t: "Window" not in t),
+        ("one stream, no branches (no Union)", lambda t: "Union" not in t),
     ])
 
     topk = QUERIES["sim_cosine_topk"](spark, SF)
@@ -338,15 +347,15 @@ def main():
     ])
 
     def scans_le(n: int):
-        # full extraction pipelines split the small/big size paths BEFORE
-        # the kernel (CLAUDE.md invariant), so each path scans once
+        # full extraction pipelines are one stream with one kernel call per
+        # chunk row (CLAUDE.md invariant), so the input scans once
         return lambda t: t.split("\n\n(1)")[0].count("Scan parquet") <= n
 
     ui = QUERIES["ext_url_images"](spark, SF)
     add("ext_url_images — one URL kernel, fan-out + extraction shared "
         "downstream", ui, [
-        ("at most one scan per size path (small/big split pre-kernel)",
-         scans_le(2)),
+        ("one scan (one extraction stream, no size-path branches)",
+         scans_le(1)),
         ("Arrow-batched kernels only (no row-at-a-time Python)",
          lambda t: "BatchEvalPython" not in t),
         ("MapInPandas present", r"MapInPandas"),
@@ -355,8 +364,8 @@ def main():
     rz = QUERIES["ext_rar7z_fanout"](spark, SF)
     add("ext_rar7z_fanout — vendored readers inside the single ingest "
         "kernel, JVM-only fan-out", rz, [
-        ("at most one scan per size path (small/big split pre-kernel)",
-         scans_le(2)),
+        ("one scan (one extraction stream, no size-path branches)",
+         scans_le(1)),
         ("Arrow-batched kernels only (no row-at-a-time Python)",
          lambda t: "BatchEvalPython" not in t),
         ("MapInPandas present", r"MapInPandas"),
@@ -403,24 +412,24 @@ def main():
     mc = QUERIES["ext_main_content"](spark, SF)
     add("ext_main_content — heuristic kernel inside the standard "
         "extraction pipeline", mc, [
-        ("one Python kernel per size path (2 MapInPandas nodes; paths "
-         "partition rows, so a row runs exactly one kernel)",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 2),
+        ("one extraction kernel (1 MapInPandas node: a row runs exactly "
+         "one kernel)",
+         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 1),
         ("page synthesis is pure codegen (concat/when before the kernel)",
          lambda t: "BatchEvalPython" not in t),
-        ("big-path skew machinery present (span-chunk windows)",
-         r"Window"),
+        ("span chunks built in-row, reassembled by one aggregate (no "
+         "Window)", lambda t: "Window" not in t and "ObjectHashAggregate" in t),
     ])
 
     ag = QUERIES["ext_archive_guards"](spark, SF)
-    add("ext_archive_guards — guards inside the once-run, cached ingest "
-        "kernel; JVM fan-out", ag, [
-        ("4 MapInPandas nodes: fixture builder + ingest (run once, "
-         "cached) + one extraction kernel per size path",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 4),
-        ("BOTH extraction paths read the cached ingest "
-         "(InMemoryTableScan — containers never parse twice)",
-         lambda t: t.count("InMemoryTableScan") >= 2),
+    add("ext_archive_guards — guards inside the once-run ingest kernel; "
+        "JVM fan-out", ag, [
+        ("3 MapInPandas nodes: fixture builder + ingest + one extraction "
+         "kernel",
+         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 3),
+        ("nothing persisted: the one stream consumes the ingest once "
+         "(no InMemoryRelation — containers never parse twice)",
+         lambda t: "InMemoryRelation" not in t),
         ("exactly one parquet scan node of documents feeds everything",
          lambda t: len(set(re.findall(r"Scan parquet\s*\((\d+)\)",
                                       t))) == 1),
@@ -458,14 +467,14 @@ def main():
     ])
 
     wq = QUERIES["ext_warc_source"](spark, SF)
-    add("ext_warc_source — WARC split + routing in the cached ingest "
-        "kernel; shared extraction tail", wq, [
-        ("4 MapInPandas nodes: fixture builder + WARC ingest (run once, "
-         "cached) + one extraction kernel per size path",
-         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 4),
-        ("BOTH extraction paths read the cached ingest (WARC files "
-         "never decompress twice)",
-         lambda t: t.count("InMemoryTableScan") >= 2),
+    add("ext_warc_source — WARC split + routing in the ingest kernel; "
+        "shared extraction tail", wq, [
+        ("3 MapInPandas nodes: fixture builder + WARC ingest + one "
+         "extraction kernel",
+         lambda t: len(set(re.findall(r"MapInPandas \((\d+)\)", t))) == 3),
+        ("nothing persisted: the one stream consumes the ingest once "
+         "(no InMemoryRelation — WARC files never decompress twice)",
+         lambda t: "InMemoryRelation" not in t),
         ("record fan-out happens inside the kernel — no Python between "
          "kernels", lambda t: "BatchEvalPython" not in t),
     ])

@@ -77,16 +77,11 @@ def main(argv: list[str]) -> int:
     spark = get_spark(app_name="extract-text-submit")
     t0 = time.monotonic()
     if args.input_format == "binary":
-        from pyspark import StorageLevel
         from extract_text_spark.ingest import ingest_bytes_df, named_binary_df
-        # materialization barrier: the checkpointed pipeline consumes docs
-        # several times (bucket derivation, emptiness probe, small/big
-        # extraction paths) — without the persist each pass re-runs the
-        # container-parsing kernel over every file
-        docs = ingest_bytes_df(
-            named_binary_df(spark.read.format("binaryFile")
-                            .load(args.input))).persist(
-            StorageLevel.MEMORY_AND_DISK)
+        # run_extraction reads its input once: the container-parsing kernel
+        # runs once per file with no persist
+        docs = ingest_bytes_df(named_binary_df(
+            spark.read.format("binaryFile").load(args.input)))
     else:
         docs = spark.read.parquet(args.input)
     metrics = run_extraction(
