@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -51,11 +52,17 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, output_dir: str) -> DataFrame | None:
+    """The manifest's done buckets, one row per manifest entry (a bucket
+    that was re-run repeats), or None when there is no manifest yet.
+
+    The manifest writer's own schema is given, so the read infers none, and
+    callers dedupe in Python: collecting this is one Spark job."""
     try:
-        m = spark.read.parquet(f"{output_dir}/_manifest")
-        return m.filter(F.col("status") == "done").select("bucket").distinct()
-    except Exception:
+        m = spark.read.schema("bucket int, status string").parquet(
+            f"{output_dir}/_manifest")
+    except AnalysisException:
         return None
+    return m.filter(F.col("status") == "done").select("bucket")
 
 
 def _summary(rows: list, wall_ms: int) -> dict:

@@ -504,7 +504,7 @@ def _member_model(content: bytes, path: str, depth: int) -> dict | None:
         if depth + 1 >= MAX_ARCHIVE_NESTING:
             # The JVM fan-out owns cap semantics: emit the member with an
             # empty member list; its child doc surfaces as status='empty'
-            # (pipeline._expand_member depth guard).
+            # (pipeline._expand_member_sql depth guard).
             members: list[dict] = []
         else:
             try:

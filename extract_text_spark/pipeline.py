@@ -23,6 +23,14 @@ Stages (all declarative except the extraction kernel itself):
    order-preserving. The input is consumed exactly once, so nothing is
    persisted.
 
+The static expressions of stages 1, 2 and 5 are SQL text built by
+pure-Python helpers (at import, except the chunk predicate's threshold and
+the reassembled field list) and parsed once per DataFrame op
+(``selectExpr``/``F.expr``). A Column-DSL chain would cost one py4j round
+trip per expression node, ~8,000 per plan, paid again by every
+``run_extraction`` and every streaming micro-batch. Only constants are
+interpolated: strings through ``_q``, numbers through ``int``.
+
 The output schema is
 ``(doc_id, status, spans array<struct<kind,text,media_ref,offset>>,
 n_spans, n_chars, bytes_in)``.
@@ -33,7 +41,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -78,26 +86,6 @@ _MEMBER_TYPE = StructType([
     StructField("is_archive", BooleanType()),
     StructField("members", StringType()),
 ])
-
-
-def _sanitize_path_col(path: Column) -> Column:
-    """A7 path sanitation as a regexp chain (app/extractors.py:1996-2014)."""
-    p = F.regexp_replace(path, r"\.\.", "")
-    p = F.regexp_replace(p, r"\\", "/")
-    p = F.regexp_replace(p, r"^/+|/+$", "")
-    parts = F.filter(F.split(p, "/"), lambda x: (x != "") & (x != F.lit(".")))
-    return F.array_join(parts, "/")
-
-
-def _is_system_file_col(path: Column) -> Column:
-    """A8 substring blacklist (app/extractors.py:2016-2035)."""
-    lowered = F.lower(path)
-    cond = F.lit(False)
-    for marker in SYSTEM_FILE_MARKERS:
-        cond = cond | lowered.contains(marker)
-    return cond
-
-
 _DOC_STRUCT = StructType([
     StructField("doc_id", StringType()),
     StructField("spans", SPANS_TYPE),
@@ -107,95 +95,142 @@ _DOCS_TYPE = ArrayType(_DOC_STRUCT)
 ARCHIVE_TOO_LARGE = "error: Archive content too large"
 
 
-def _empty_docs() -> Column:
-    return F.array().cast(_DOCS_TYPE.simpleString())
+def _q(text: str) -> str:
+    """``text`` as a SQL string literal. Only module constants pass through
+    here (markers, statuses, regexes, schema DDL), never row data."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _doc_struct(doc_id: Column, spans: Column, status: Column | None = None) -> Column:
-    return F.struct(
-        doc_id.alias("doc_id"),
-        spans.cast(SPANS_TYPE.simpleString()).alias("spans"),
-        (status if status is not None
-         else F.lit(None).cast(StringType())).alias("status"),
-    )
+_SPANS_DDL = SPANS_TYPE.simpleString()
+_EMPTY_SPANS = f"CAST(array() AS {_SPANS_DDL})"
+_EMPTY_DOCS = f"CAST(array() AS {_DOCS_TYPE.simpleString()})"
+_NULL_STR = "CAST(NULL AS STRING)"
+_MEMBER_DDL = _q(_MEMBER_TYPE.simpleString())
+_MEMBERS_DDL = _q(ArrayType(_MEMBER_TYPE).simpleString())
+_DOTDOT, _BACKSLASH, _EDGE_SLASHES = _q(r"\.\."), _q(r"\\"), _q("^/+|/+$")
 
 
-def _member_budget(members: Column) -> Column:
+def _sanitize_path_sql(path: str, v: str = "seg") -> str:
+    """A7 path sanitation as a regexp chain (app/extractors.py:1996-2014).
+    ``v`` names the segment lambda's variable."""
+    p = f"regexp_replace({path}, {_DOTDOT}, '')"
+    p = f"regexp_replace({p}, {_BACKSLASH}, '/')"
+    p = f"regexp_replace({p}, {_EDGE_SLASHES}, '')"
+    return (f"array_join(filter(split({p}, '/', -1), "
+            f"{v} -> ({v} != '') AND ({v} != '.')), '/')")
+
+
+def _is_system_file_sql(path: str) -> str:
+    """A8 substring blacklist (app/extractors.py:2016-2035). Parenthesized
+    left-deep: the SQL parser would balance a flat OR chain."""
+    cond = "false"
+    for marker in SYSTEM_FILE_MARKERS:
+        cond = f"({cond} OR contains(lower({path}), {_q(marker)}))"
+    return cond
+
+
+def _doc_struct_sql(doc_id: str, spans: str, status: str = _NULL_STR) -> str:
+    return (f"struct({doc_id} AS doc_id, CAST({spans} AS {_SPANS_DDL}) AS spans,"
+            f" {status} AS status)")
+
+
+def _too_large_sql(doc_id: str) -> str:
+    """The bomb guard's single error row for a rejected archive."""
+    return f"array({_doc_struct_sql(doc_id, _EMPTY_SPANS, _q(ARCHIVE_TOO_LARGE))})"
+
+
+def _member_budget_sql(members: str, v: int) -> str:
     """Zip-bomb guard sum (A2, app/extractors.py:1668-1677)."""
-    return F.aggregate(
-        members, F.lit(0).cast(LongType()),
-        lambda acc, m: acc + F.coalesce(F.length(m.text), F.lit(0))
-        + F.coalesce(F.length(m.members), F.lit(0)),
-    )
+    acc, b = f"acc{v}", f"b{v}"
+    return (f"aggregate({members}, CAST(0 AS BIGINT), ({acc}, {b}) -> {acc}"
+            f" + coalesce(length({b}.text), 0)"
+            f" + coalesce(length({b}.members), 0))")
 
 
-def _with_paths(members: Column) -> Column:
+def _with_paths_sql(members: str, v: int) -> str:
     """Bind each member to its sanitized path ONCE. Catalyst does not CSE
-    inside lambdas, so referencing _sanitize_path_col(m.path) repeatedly
+    inside lambdas, so referencing the sanitized m.path repeatedly
     (empty-check, 9 system-file Contains, child id) would inline the whole
-    regexp chain ~11x per member."""
-    return F.transform(
-        members,
-        lambda m: F.struct(m.alias("m"), _sanitize_path_col(m.path).alias("path")),
-    )
+    regexp chain ~11x per member. A null path sanitizes to '' as in the
+    oracle's sanitize_archive_filename(None), so the member is dropped
+    rather than emitted under its parent's doc_id."""
+    w = f"w{v}"
+    path = _sanitize_path_sql(f"{w}.path", f"seg{v}")
+    return f"transform({members}, {w} -> struct({w} AS m, coalesce({path}, '') AS path))"
 
 
-def _expand_member(parent_id: Column, mp: Column, depth: int) -> Column:
-    """One (member, path) pair -> array<doc> (recursively inlined)."""
-    m, path = mp.m, mp.path
-    child_id = F.concat_ws("/", parent_id, path)
-    leaf = F.array(_doc_struct(
+def _expand_member_sql(parent_id: str, mp: str, depth: int) -> str:
+    """One (member, path) pair -> array<doc> (recursively inlined). Lambda
+    variables carry the depth: inner levels refer to outer ones."""
+    m, path = f"{mp}.m", f"{mp}.path"
+    child_id = f"concat_ws('/', {parent_id}, {path})"
+    leaf = "array({})".format(_doc_struct_sql(
         child_id,
-        F.array(F.struct(
-            m.kind.alias("kind"), m.text.alias("text"),
-            m.media_ref.alias("media_ref"), F.lit(0).alias("offset"),
-        )),
+        f"array(struct({m}.kind AS kind, {m}.text AS text,"
+        f" {m}.media_ref AS media_ref, 0 AS `offset`))",
     ))
-    is_nested = F.coalesce(m.is_archive, F.lit(False)) & m.members.isNotNull()
+    # A non-empty member list, the oracle's truthiness test: from_json('')
+    # is null, and one null in the flattened array drops the whole archive.
+    is_nested = f"coalesce({m}.is_archive, false) AND {m}.members != ''"
+    sub = f"from_json({m}.members, {_MEMBERS_DDL})"
     if depth < MAX_ARCHIVE_NESTING:
-        nested = _expand_archive(
-            child_id, F.from_json(m.members, ArrayType(_MEMBER_TYPE)), depth + 1
-        )
+        nested = _expand_archive_sql(child_id, sub, depth + 1)
     else:
         # Past the nesting cap: keep the child with unexpanded
         # archive_member spans (the kernel drops them — the reference's
         # skip-on-depth, app/extractors.py:1580-1584).
-        nested = F.array(_doc_struct(
+        mm, i = f"mm{depth}", f"i{depth}"
+        nested = "array({})".format(_doc_struct_sql(
             child_id,
-            F.transform(
-                F.from_json(m.members, ArrayType(_MEMBER_TYPE)),
-                lambda mm, i: F.struct(
-                    F.lit("archive_member").alias("kind"),
-                    F.to_json(mm).alias("text"),
-                    F.lit(None).cast(StringType()).alias("media_ref"),
-                    i.cast(IntegerType()).alias("offset"),
-                ),
-            ),
+            f"transform({sub}, ({mm}, {i}) -> struct('archive_member' AS kind,"
+            f" to_json({mm}) AS text, {_NULL_STR} AS media_ref,"
+            f" CAST({i} AS INT) AS `offset`))",
         ))
-    return (
-        F.when((path == "") | _is_system_file_col(path), _empty_docs())
-        .when(is_nested, nested)
-        .otherwise(leaf)
-    )
+    return (f"CASE WHEN ({path} = '') OR {_is_system_file_sql(path)}"
+            f" THEN {_EMPTY_DOCS} WHEN {is_nested} THEN {nested} ELSE {leaf} END")
 
 
-def _expand_archive(doc_id: Column, members: Column, depth: int) -> Column:
-    """Parsed member list -> array<doc>, with the bomb guard per archive."""
-    expanded = F.flatten(
-        F.transform(_with_paths(members),
-                    lambda mp: _expand_member(doc_id, mp, depth))
+def _expand_archive_sql(doc_id: str, members: str, depth: int) -> str:
+    """Parsed member list -> array<doc>, with the bomb guard per archive.
+    An empty list keeps the archive as one doc without spans, as the
+    oracle's next round passes a doc with no archive spans through."""
+    mp = f"mp{depth}"
+    expanded = (f"flatten(transform({_with_paths_sql(members, depth)},"
+                f" {mp} -> {_expand_member_sql(doc_id, mp, depth)}))")
+    return (f"CASE WHEN size({members}) = 0"
+            f" THEN array({_doc_struct_sql(doc_id, _EMPTY_SPANS)})"
+            f" WHEN {_member_budget_sql(members, depth)} > {MAX_EXTRACTED_SIZE}"
+            f" THEN {_too_large_sql(doc_id)} ELSE {expanded} END")
+
+
+def _fanout_sql() -> str:
+    """Every fanned document of one input row, as one array<doc>."""
+    arch = ("array_sort(filter(spans, s -> s.kind = 'archive_member'),"
+            " (a, b) -> CASE WHEN a.`offset` < b.`offset` THEN -1"
+            " WHEN a.`offset` > b.`offset` THEN 1 ELSE 0 END)")
+    rest = "filter(spans, r -> r.kind != 'archive_member')"
+    members = f"transform({arch}, j -> from_json(j.text, {_MEMBER_DDL}))"
+    passthrough = f"array({_doc_struct_sql('doc_id', 'spans', 'status')})"
+    parent_part = (f"CASE WHEN size({rest}) > 0"
+                   f" THEN array({_doc_struct_sql('doc_id', rest)})"
+                   f" ELSE {_EMPTY_DOCS} END")
+    fanned = (
+        f"CASE WHEN {_member_budget_sql(members, 1)} > {MAX_EXTRACTED_SIZE}"
+        f" THEN {_too_large_sql('doc_id')} ELSE concat({parent_part},"
+        f" flatten(transform({_with_paths_sql(members, 1)},"
+        f" mp1 -> {_expand_member_sql('doc_id', 'mp1', 1)}))) END"
     )
-    return F.when(
-        _member_budget(members) > MAX_EXTRACTED_SIZE,
-        F.array(_doc_struct(doc_id, F.array().cast(SPANS_TYPE.simpleString()),
-                            F.lit(ARCHIVE_TOO_LARGE))),
-    ).otherwise(expanded)
+    return (f"CASE WHEN (size({arch}) = 0) OR status IS NOT NULL"
+            f" THEN {passthrough} ELSE {fanned} END")
+
+
+_OUT_DOCS = _fanout_sql()
 
 
 def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
     """A1-A6 archive fan-out in ONE scan: a single nested-transform
     expression computes every fan-out level (bounded depth 3) per row, then
-    one ``posexplode`` emits the documents — no unions, no repeated scans.
+    one ``explode`` emits the documents — no unions, no repeated scans.
     Path sanitation (A7), system-file filter (A8) and the 100 MB bomb guard
     (A2) are inlined as column predicates; guard-rejected rows surface with
     a non-null ``status``.
@@ -207,49 +242,15 @@ def explode_archives_df(df: DataFrame, with_root: bool = False) -> DataFrame:
     themselves contain ``/``.
     """
     if "status" not in df.columns:
-        df = df.withColumn("status", F.lit(None).cast(StringType()))
+        df = df.withColumn("status", F.expr(_NULL_STR))
     # Fail-closed on malformed rows: a null spans array would null-propagate
     # through the fan-out expression and the document would vanish from the
     # output silently; coalesce to empty so it surfaces as status='empty'.
-    df = df.withColumn(
-        "spans", F.coalesce("spans", F.array().cast(SPANS_TYPE.simpleString()))
-    )
-
-    arch = F.array_sort(
-        F.filter("spans", lambda s: s.kind == F.lit("archive_member")),
-        lambda a, b: F.when(a.offset < b.offset, -1)
-                     .when(a.offset > b.offset, 1).otherwise(0),
-    )
-    rest = F.filter("spans", lambda s: s.kind != F.lit("archive_member"))
-    members = F.transform(arch, lambda s: F.from_json(s.text, _MEMBER_TYPE))
-
-    doc_id, status = F.col("doc_id"), F.col("status")
-    passthrough = F.array(_doc_struct(doc_id, F.col("spans"), status))
-    parent_part = F.when(
-        F.size(rest) > 0, F.array(_doc_struct(doc_id, rest))
-    ).otherwise(_empty_docs())
-    fanned = F.when(
-        _member_budget(members) > MAX_EXTRACTED_SIZE,
-        F.array(_doc_struct(doc_id, F.array().cast(SPANS_TYPE.simpleString()),
-                            F.lit(ARCHIVE_TOO_LARGE))),
-    ).otherwise(
-        F.concat(
-            parent_part,
-            F.flatten(F.transform(_with_paths(members),
-                                  lambda mp: _expand_member(doc_id, mp, 1))),
-        )
-    )
-    out_docs = F.when(
-        (F.size(arch) == 0) | status.isNotNull(), passthrough
-    ).otherwise(fanned)
-
+    df = df.withColumn("spans", F.expr(f"coalesce(spans, {_EMPTY_SPANS})"))
     out = (
-        df.select(F.col("doc_id").alias("_root"), F.explode(out_docs).alias("d"))
-        .select(
-            "d.doc_id", "d.spans", "d.status",
-            F.when(F.col("d.doc_id") != F.col("_root"), F.col("_root"))
-            .alias("root_id"),
-        )
+        df.selectExpr("doc_id AS _root", f"explode({_OUT_DOCS}) AS d")
+        .selectExpr("d.doc_id", "d.spans", "d.status",
+                    "CASE WHEN d.doc_id != _root THEN _root END AS root_id")
     )
     return out if with_root else out.drop("root_id")
 
@@ -285,7 +286,7 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
         yield pd.concat([out, extra], axis=1)
 
 
-def _splittable_col(threshold: int):
+def _splittable_sql(threshold: int) -> str:
     """Oversized page-independent docs are eligible for span chunking.
 
     Only docs whose every span is pdf_page/media (doc-level semantics like
@@ -293,47 +294,70 @@ def _splittable_col(threshold: int):
     chunk of their preceding page so the page-then-images interleaving
     survives chunk boundaries.
     """
-    doc_bytes = F.aggregate(
-        "spans", F.lit(0).cast(LongType()),
-        lambda acc, s: acc + F.coalesce(F.length(s.text), F.lit(0)),
-    )
-    return (doc_bytes > threshold) & F.forall(
-        "spans", lambda s: s.kind.isin("pdf_page", "media")
-    )
+    return ("aggregate(spans, CAST(0 AS BIGINT),"
+            " (acc, s) -> acc + coalesce(length(s.text), 0))"
+            f" > {int(threshold)}"
+            " AND forall(spans, s -> s.kind IN ('pdf_page', 'media'))")
+
+
+def _chunk_start_sql(c: str) -> str:
+    """1-based position of chunk c's first span."""
+    return (f"(CASE WHEN {c} = 0 THEN 1"
+            f" ELSE element_at(_anchors, {c} * {SKEW_CHUNK_SPANS} + 1) + 1 END)")
+
+
+_ANCHORS = ("filter(transform(spans, (s, i) -> CASE WHEN s.kind != 'media'"
+            " THEN i END), i -> i IS NOT NULL)")
+_N_CHUNKS = ("CAST(CASE WHEN _anchors IS NULL THEN 1 ELSE"
+             f" greatest(ceil(size(_anchors) / {SKEW_CHUNK_SPANS}), 1) END AS INT)")
+_CHUNKS = (
+    "CASE WHEN n_chunks = 1 THEN array(spans) ELSE"
+    " transform(sequence(0, n_chunks - 1), c -> slice(spans,"
+    f" {_chunk_start_sql('c')}, CASE WHEN c = n_chunks - 1 THEN size(spans) + 1"
+    f" ELSE {_chunk_start_sql('(c + 1)')} END - {_chunk_start_sql('c')})) END"
+)
 
 
 def _chunk_rows(fanned: DataFrame, threshold: int) -> DataFrame:
     """One row per span chunk, adding ``(chunk_id, n_chunks)``.
 
-    A doc is one chunk unless ``_splittable_col`` holds. A split doc gets
+    A doc is one chunk unless ``_splittable_sql`` holds. A split doc gets
     ``SKEW_CHUNK_SPANS`` payload spans per chunk, each media span staying
     with the page before it: chunk c starts at the (c*K)-th non-media span
     (chunk 0 at position 0) and ends where chunk c+1 starts. Built in-row
     with higher-order functions — no shuffle. The anchor positions and
     chunk count are real columns because Catalyst does not CSE inside
     lambdas."""
-    k = SKEW_CHUNK_SPANS
-    anchors = F.filter(
-        F.transform("spans", lambda s, i: F.when(s.kind != "media", i)),
-        lambda i: i.isNotNull(),
-    )
-    a, n = F.col("_anchors"), F.col("n_chunks")
-
-    def start(c):  # 1-based position of chunk c's first span
-        return F.when(c == 0, 1).otherwise(F.element_at(a, c * k + 1) + 1)
-
-    chunks = F.when(n == 1, F.array("spans")).otherwise(F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda c: F.slice("spans", start(c), F.when(
-            c == n - 1, F.size("spans") + 1).otherwise(start(c + 1)) - start(c)),
-    ))
     keep = [c for c in fanned.columns if c != "spans"]
     return (
-        fanned.withColumn("_anchors", F.when(_splittable_col(threshold), anchors))
-        .withColumn("n_chunks", F.when(a.isNull(), 1).otherwise(
-            F.greatest(F.ceil(F.size(a) / k), F.lit(1))).cast(IntegerType()))
-        .select(*keep, "n_chunks", F.posexplode(chunks).alias("chunk_id", "spans"))
+        fanned.withColumn("_anchors", F.expr(
+            f"CASE WHEN {_splittable_sql(threshold)} THEN {_ANCHORS} END"))
+        .withColumn("n_chunks", F.expr(_N_CHUNKS))
+        .selectExpr(*keep, "n_chunks",
+                    f"posexplode({_CHUNKS}) AS (chunk_id, spans)")
     )
+
+
+def _parts_total_sql(name: str, init: str = "CAST(0 AS BIGINT)") -> str:
+    return f"aggregate(parts, {init}, (acc, c) -> acc + c.{name})"
+
+
+# A split doc's merged fields, over its sorted chunk rows ``parts`` and
+# their first error status ``err``.
+_MERGED = {
+    "status": "CASE WHEN err IS NOT NULL THEN err"
+              " WHEN exists(parts, c -> c.status = 'ok') THEN 'ok' ELSE 'empty' END",
+    "spans": f"transform(CASE WHEN err IS NOT NULL THEN {_EMPTY_SPANS}"
+             " ELSE flatten(transform(parts, c -> c.spans)) END,"
+             " (s, i) -> struct(s.kind AS kind, s.text AS text,"
+             " s.media_ref AS media_ref, i AS `offset`))",
+    "n_spans": "CASE WHEN err IS NOT NULL THEN 0"
+               f" ELSE {_parts_total_sql('n_spans', '0')} END",
+    "n_chars": "CASE WHEN err IS NOT NULL THEN CAST(0 AS BIGINT)"
+               f" ELSE {_parts_total_sql('n_chars')} END",
+    "bytes_in": _parts_total_sql("bytes_in"),
+    "root_id": "element_at(parts, 1).root_id",
+}
 
 
 def _reassemble(out: DataFrame) -> DataFrame:
@@ -347,39 +371,21 @@ def _reassemble(out: DataFrame) -> DataFrame:
     (bytes_in stays the summed input size, as in the unsplit error row).
     """
     fields = [c for c in out.columns if c not in ("doc_id", "chunk_id", "n_chunks")]
-    zero = F.lit(0).cast(LongType())
-
-    def total(name, init=zero):
-        return F.aggregate("parts", init, lambda acc, c: acc + c[name])
-
-    err = F.col("err")
-    flat = F.when(err.isNotNull(), F.array().cast(SPANS_TYPE.simpleString())) \
-        .otherwise(F.flatten(F.transform("parts", lambda c: c.spans)))
-    merged = {
-        "status": F.when(err.isNotNull(), err)
-        .when(F.exists("parts", lambda c: c.status == "ok"), F.lit("ok"))
-        .otherwise(F.lit("empty")),
-        "spans": F.transform(flat, lambda s, i: F.struct(
-            s.kind.alias("kind"), s.text.alias("text"),
-            s.media_ref.alias("media_ref"), i.alias("offset"))),
-        "n_spans": F.when(err.isNotNull(), 0).otherwise(total("n_spans", F.lit(0))),
-        "n_chars": F.when(err.isNotNull(), zero).otherwise(total("n_chars")),
-        "bytes_in": total("bytes_in"),
-        "root_id": F.element_at("parts", 1).root_id,
-    }
-    whole = F.transform(F.filter("cs", lambda c: c.n_chunks == 1),
-                        lambda c: F.struct(*[c[f].alias(f) for f in fields]))
-    split = F.when(F.size("parts") > 0,
-                   F.struct(*[merged[f].alias(f) for f in fields]))
+    whole = ("transform(filter(cs, c -> c.n_chunks = 1), c -> struct("
+             + ", ".join(f"c.{f} AS {f}" for f in fields) + "))")
+    split = ("CASE WHEN size(parts) > 0 THEN struct("
+             + ", ".join(f"{_MERGED[f]} AS {f}" for f in fields) + ") END")
     return (
         out.groupBy("doc_id")
-        .agg(F.collect_list(F.struct("chunk_id", "n_chunks", *fields)).alias("cs"))
-        .withColumn("parts", F.array_sort(F.filter("cs", lambda c: c.n_chunks > 1)))
-        .withColumn("err", F.array_max(F.transform(
-            "parts", lambda c: F.when(c.status.startswith("error"), c.status))))
-        .select("doc_id", F.explode(F.filter(
-            F.concat(whole, F.array(split)), lambda d: d.isNotNull())).alias("d"))
-        .select("doc_id", *[f"d.{f}" for f in fields])
+        .agg(F.expr(f"collect_list(struct(chunk_id, n_chunks, {', '.join(fields)}))"
+                    " AS cs"))
+        .withColumn("parts", F.expr("array_sort(filter(cs, c -> c.n_chunks > 1))"))
+        .withColumn("err", F.expr(
+            "array_max(transform(parts, c -> CASE WHEN startswith(c.status, 'error')"
+            " THEN c.status END))"))
+        .selectExpr("doc_id", f"explode(filter(concat({whole}, array({split})),"
+                              " x -> x IS NOT NULL)) AS d")
+        .selectExpr("doc_id", *[f"d.{f}" for f in fields])
     )
 
 
@@ -407,14 +413,14 @@ def extract_spans_df(
         rows = _chunk_rows(rows, skew_threshold)
     if salt_partitions:
         # (doc_id, chunk_id): a whale's chunks spread across tasks
-        key = F.xxhash64("doc_id", *(["chunk_id"] if skew_split else []))
-        rows = rows.repartition(salt_partitions,
-                                F.pmod(key, F.lit(salt_partitions)))
+        key = "xxhash64(doc_id, chunk_id)" if skew_split else "xxhash64(doc_id)"
+        rows = rows.repartition(
+            salt_partitions, F.expr(f"pmod({key}, {int(salt_partitions)})"))
     extra = [f for f in rows.schema.fields if f.name not in _KERNEL_IN]
     out = rows.mapInPandas(_extract_batches,
                            schema=StructType(OUT_SCHEMA.fields + extra))
     if skew_split:
         out = _reassemble(out)
     if keep_root:
-        out = out.withColumn("root_id", F.coalesce("root_id", "doc_id"))
+        out = out.withColumn("root_id", F.expr("coalesce(root_id, doc_id)"))
     return out

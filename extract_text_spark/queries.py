@@ -3152,12 +3152,12 @@ FROM f ORDER BY doc_id
 
 def ext_sanitize_paths(spark, sf_dir):
     """A7 sanitation chain (app/extractors.py:1996-2014) as regexp ops."""
-    from .pipeline import _sanitize_path_col
+    from .pipeline import _sanitize_path_sql
     d = _t(spark, sf_dir, "documents")
     dirty = F.concat(F.lit("../"), F.col("source"), F.lit("\\sub/./"),
                      F.col("doc_id").cast("string"), F.lit(".txt"))
-    return d.select(
-        "doc_id", dirty.alias("dirty"), _sanitize_path_col(dirty).alias("clean")
+    return d.select("doc_id", dirty.alias("dirty")).select(
+        "doc_id", "dirty", F.expr(_sanitize_path_sql("dirty")).alias("clean")
     ).orderBy("doc_id")
 
 
@@ -3183,7 +3183,7 @@ FROM s ORDER BY doc_id
 
 def ext_system_file_filter(spark, sf_dir):
     """A8 system-file blacklist (app/extractors.py:2016-2035)."""
-    from .pipeline import _is_system_file_col
+    from .pipeline import _is_system_file_sql
     d = _t(spark, sf_dir, "documents")
     path = (
         F.when(F.pmod("doc_id", F.lit(5)) == 0,
@@ -3195,7 +3195,7 @@ def ext_system_file_filter(spark, sf_dir):
     )
     return (
         d.select("doc_id", path.alias("path"))
-        .filter(~_is_system_file_col(F.col("path")))
+        .filter(~F.expr(_is_system_file_sql("path")))
         .orderBy("doc_id")
     )
 

@@ -144,3 +144,23 @@ def test_manifest_metrics(spark, tmp_path):
     assert row["s"] == stats["spans"]
     assert row["b"] == stats["bytes_in"] and row["b"] > 0
     assert {r["status"] for r in m.collect()} == {"done"}
+
+
+def test_completed_buckets_is_one_spark_job(spark, tmp_path):
+    """The done-set read infers no schema and shuffles nothing: reading
+    and collecting it is exactly one Spark job."""
+    out = str(tmp_path / "out")
+    docs = corpus_to_df(spark, gen_corpus(20, seed=7))
+    run_extraction(spark, docs, out, num_buckets=4)
+    sc = spark.sparkContext
+    group = "completed-buckets-read"
+    sc.setJobGroup(group, "done-set read")
+    try:
+        done = {r.bucket for r in completed_buckets(spark, out).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    written = spark.read.parquet(f"{out}/data").select("bucket").distinct()
+    assert done == {r.bucket for r in written.collect()}
+    assert completed_buckets(spark, str(tmp_path / "missing")) is None

@@ -2,6 +2,8 @@
 span-sequence equality (kind, text, media_ref, order) per document, plus
 skew-split equivalence and plan-shape checks."""
 
+import json
+
 import pytest
 
 from extract_text_spark.corpus import corpus_to_df, gen_corpus, oracle_extract
@@ -180,3 +182,102 @@ def test_null_spans_surface_as_empty_not_dropped(spark):
                                 schema=DOC_SCHEMA)
     res = {r["doc_id"]: r["status"] for r in extract_spans_df(bad).collect()}
     assert res == {"nullspans": "empty", "nospans": "empty"}
+
+
+def _member(path, text="body", kind="plain", members=None):
+    return {"path": path, "kind": kind, "text": text, "media_ref": None,
+            "is_archive": members is not None, "members": members}
+
+
+def _archive(doc_id, members, rest=()):
+    return {"doc_id": doc_id, "spans": list(rest) + [
+        {"kind": "archive_member", "text": json.dumps(m), "media_ref": None,
+         "offset": i} for i, m in enumerate(members)]}
+
+
+def _nest(depth, leaf):
+    """``depth`` nested archives l1.zip/.../l{depth}.zip around ``leaf``,
+    each level with a plain sibling."""
+    members = [leaf]
+    for d in range(depth, 0, -1):
+        members = [_member(f"l{d}.zip", None, "archive", json.dumps(members)),
+                   _member(f"side{d}.txt", f"level {d}")]
+    return members
+
+
+_PLAIN = {"kind": "plain", "text": "parent body", "media_ref": None,
+          "offset": 0}
+_HOSTILE = {
+    "paths": [_archive("p.zip", [
+        _member(p, f"from {p!r}") for p in
+        ("a\\b.txt", "../up.txt", "/lead.txt", "trail.txt/", "./dot.txt",
+         "c//d.txt", ".", "", "..")])],
+    "system_markers": [_archive("s.zip", [
+        _member(p) for p in
+        ("Thumbs.DB", "dir/.Git/config", "__MACOSX/x.txt", "Desktop.INI",
+         "keep.txt")])],
+    "depth_past_cap": [_archive("deep.zip", _nest(4, _member("bottom.txt")))],
+    "archive_with_spans": [_archive("mix.zip", [_member("in.txt")], [_PLAIN])],
+    "preset_status": [
+        _archive("st.zip", [_member("in.txt")]),
+        {"doc_id": "bad.bin", "spans": [_PLAIN],
+         "status": "error: Unsupported file format: bin"}],
+    "null_member_path": [_archive("null_path", [
+        _member(None), _member("ok.txt")], [_PLAIN])],
+    "empty_nested_members": [_archive("nes", [
+        _member("n.zip", None, "archive", ""), _member("ok.txt")])],
+    "empty_nested_list": [_archive("lst", [
+        _member("n.zip", None, "archive", "[]"), _member("ok.txt")])],
+}
+
+
+@pytest.mark.parametrize("keep_root", [False, True])
+@pytest.mark.parametrize("case", sorted(_HOSTILE))
+def test_hostile_fanout_matches_oracle(spark, case, keep_root):
+    """Archive fan-out edge cases (path sanitation, system-file markers in
+    any case, nesting one past the cap, archives with their own spans,
+    pre-set statuses, null paths, empty or blank nested member lists)
+    against the single-process oracle, row for row."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from extract_text_spark.pipeline import DOC_SCHEMA
+    docs = _HOSTILE[case]
+    schema = StructType(DOC_SCHEMA.fields + [StructField("status", StringType())])
+    df = spark.createDataFrame(
+        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                        for s in d["spans"]], d.get("status")) for d in docs],
+        schema=schema)
+    rows = extract_spans_df(df, keep_root=keep_root).collect()
+    assert len(rows) == len({r["doc_id"] for r in rows})
+    assert _spanify(rows) == _oracle(docs)
+    if keep_root:
+        roots = {d["doc_id"] for d in docs}
+        for r in rows:
+            assert r["root_id"] in roots
+            assert r["doc_id"] == r["root_id"] or \
+                r["doc_id"].startswith(r["root_id"] + "/")
+
+
+def test_plan_construction_round_trips(spark, corpus):
+    """Building the extraction plan is a few hundred py4j round trips: its
+    static expressions are SQL text, parsed once per DataFrame op (a
+    Column-DSL chain costs one round trip per node, ~8,000 for this plan)."""
+    import gc
+    docs = corpus_to_df(spark, corpus[:40])
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    gc.disable()   # no py4j object finalizers inside the count
+    client.send_command = counting
+    try:
+        extract_spans_df(docs, salt_partitions=8, keep_root=True)
+    finally:
+        del client.send_command
+        gc.enable()
+    assert 0 < calls <= 500, calls
