@@ -18,9 +18,9 @@ Design (see SURVEY.md for the full blueprint):
 * **Extraction kernels are pure Python string transforms** (the reference
   is a Python string-transform service), executed as Arrow-batched
   ``mapInPandas`` (iterator form) — never per-row Python UDFs.
-* **Scale levers**: salted repartition by doc_id, span-chunk splitting for
-  oversized documents (skew), byte-aware Arrow batching, bucket-level
-  checkpoint manifests with left-anti-join resume.
+* **Scale levers**: a salt rebalance by (doc_id, chunk_id) that AQE sizes,
+  span-chunk splitting for oversized documents (skew), byte-aware Arrow
+  batching, bucket-level checkpoint manifests with left-anti-join resume.
 * **Byte ingress** (round 2): ``ingest.extract_from_bytes`` parses REAL
   file bytes — zip/tar/rar/7z containers, DOCX/XLSX/PPTX/ODT/EPUB,
   classic-xref PDFs — into the span model, with filename sanitization and

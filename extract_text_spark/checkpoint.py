@@ -158,8 +158,7 @@ def run_extraction(
     )
     rows = manifest.collect()
     if rows:
-        # the aggregate's own schema: an inferred bigint bucket must not
-        # meet the int bucket of earlier manifest files
-        spark.createDataFrame(rows, manifest.schema).write.mode(
-            "append").parquet(f"{output_dir}/_manifest")
+        # straight from the JVM aggregate: one file, no Python worker
+        manifest.coalesce(1).write.mode("append").parquet(
+            f"{output_dir}/_manifest")
     return _summary(rows, wall_ms)

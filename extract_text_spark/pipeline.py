@@ -12,9 +12,12 @@ Stages (all declarative except the extraction kernel itself):
    ``SKEW_CHUNK_SPANS`` pages per chunk, each media span glued to its
    preceding page. ``posexplode`` turns chunks into rows — the
    oversized-PDF skew rule of the north star, with no shuffle.
-3. **Salted repartition** — ``repartition(pmod(xxhash64(doc_id,
-   chunk_id), P))`` spreads hot doc_ids and a whale's chunks across
-   tasks; with AQE on, post-shuffle coalescing keeps small runs tight.
+3. **Salt rebalance** — ``REBALANCE(P, doc_id, chunk_id)`` hashes rows
+   into P shuffle partitions, spreading hot doc_ids and a whale's chunks
+   across tasks; AQE then coalesces small partitions and splits skewed
+   ones, so the kernel runs in as many tasks as its input bytes need (a
+   fixed-count ``repartition`` is never coalesced, and every Python task
+   pays its worker set-up).
 4. **Extraction kernel** — ONE Arrow-batched ``mapInPandas`` (iterator
    form) running ``extractors.extract_document`` once per chunk row;
    never per-row Python UDFs, no driver-side collects.
@@ -412,10 +415,10 @@ def extract_spans_df(
     if skew_split:
         rows = _chunk_rows(rows, skew_threshold)
     if salt_partitions:
-        # (doc_id, chunk_id): a whale's chunks spread across tasks
-        key = "xxhash64(doc_id, chunk_id)" if skew_split else "xxhash64(doc_id)"
-        rows = rows.repartition(
-            salt_partitions, F.expr(f"pmod({key}, {int(salt_partitions)})"))
+        # (doc_id, chunk_id): a whale's chunks spread across tasks; AQE
+        # sizes the kernel's Python task count by bytes (docstring stage 3)
+        keys = ("doc_id", "chunk_id") if skew_split else ("doc_id",)
+        rows = rows.hint("rebalance", int(salt_partitions), *keys)
     extra = [f for f in rows.schema.fields if f.name not in _KERNEL_IN]
     out = rows.mapInPandas(_extract_batches,
                            schema=StructType(OUT_SCHEMA.fields + extra))

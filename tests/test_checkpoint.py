@@ -6,18 +6,24 @@ already-done buckets must not be reprocessed."""
 
 import pyspark.sql.functions as F
 
-from extract_text_spark.checkpoint import completed_buckets, run_extraction
-from extract_text_spark.corpus import corpus_to_df, gen_corpus
+from extract_text_spark.checkpoint import (
+    _summary, completed_buckets, run_extraction,
+)
+from extract_text_spark.corpus import corpus_to_df, gen_corpus, oracle_extract
+from extract_text_spark.pipeline import extract_spans_df
 
 
-def _result_map(spark, out_dir):
-    rows = spark.read.parquet(f"{out_dir}/data").collect()
+def _span_map(rows):
     return {
         r["doc_id"]: (r["status"],
                       [(s["kind"], s["text"], s["media_ref"], s["offset"])
                        for s in r["spans"]])
         for r in rows
     }
+
+
+def _result_map(spark, out_dir):
+    return _span_map(spark.read.parquet(f"{out_dir}/data").collect())
 
 
 def _partial_then_resume(spark, tmp_path, salt):
@@ -164,3 +170,62 @@ def test_completed_buckets_is_one_spark_job(spark, tmp_path):
     written = spark.read.parquet(f"{out}/data").select("bucket").distinct()
     assert done == {r.bucket for r in written.collect()}
     assert completed_buckets(spark, str(tmp_path / "missing")) is None
+
+
+def test_aqe_split_and_coalesce_are_invisible(spark, tmp_path, sql_conf):
+    """Tiny AQE partition sizes make the salt rebalance split big partitions
+    by map output and coalesce small ones, so a whale's chunks and a doc's
+    rows land in arbitrary kernel tasks: the output must not change."""
+    sql_conf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2k")
+    sql_conf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+    corpus = gen_corpus(400, seed=7)
+    docs = ([d for d in corpus if d["doc_id"].endswith("-skew")]
+            + [d for d in corpus if not d["doc_id"].endswith("-skew")][:40])
+    df = corpus_to_df(spark, docs)
+    salted = extract_spans_df(df, salt_partitions=16, skew_threshold=1)
+    got = _span_map(salted.collect())
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert "AQEShuffleRead coalesced and skewed" in plan
+    assert got == _span_map(extract_spans_df(df, skew_split=False).collect())
+    exp = {k: (st, [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                    for s in sp])
+           for k, (st, sp) in oracle_extract(docs).items()}
+    assert got == exp
+    _partial_then_resume(spark, tmp_path, salt=16)
+
+
+def test_python_task_budget(spark, tmp_path, kernel_tasks):
+    """A small salted run starts Python tasks by its data, not by its salt:
+    the kernel runs in at most defaultParallelism tasks however wide the
+    salt, and the manifest is written from the JVM aggregate (no Python
+    worker), one file per run whose rows are the returned summary."""
+    import glob
+
+    started, _ = kernel_tasks
+    docs = corpus_to_df(spark, gen_corpus(60, seed=3))
+    out = str(tmp_path / "out")
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans():
+        xs = store.executionsList()
+        return {xs.apply(i).executionId(): xs.apply(i).physicalPlanDescription()
+                for i in range(xs.size())}
+
+    runs = ({"bucket_filter": lambda b: b < 3}, {})
+    for n, kwargs in enumerate(runs, 1):
+        before, calls = set(plans()), started.value
+        stats = run_extraction(spark, docs, out, num_buckets=8,
+                               salt_partitions=64, **kwargs)
+        assert 0 < started.value - calls <= spark.sparkContext.defaultParallelism
+        writes = [p for k, p in plans().items()
+                  if k not in before and "_manifest" in p
+                  and "InsertIntoHadoopFsRelationCommand" in p]
+        assert len(writes) == 1
+        assert not any(op in writes[0] for op in
+                       ("ExistingRDD", "Python", "MapInPandas"))
+        assert len(glob.glob(f"{out}/_manifest/part-*.parquet")) == n
+        manifest = spark.read.parquet(f"{out}/_manifest")
+        newest = manifest.filter(
+            F.col("run_ts") == manifest.agg(F.max("run_ts")).first()[0])
+        assert stats == _summary(newest.collect(), stats["wall_ms"])
+        assert stats["buckets"] > 0

@@ -281,3 +281,18 @@ def test_plan_construction_round_trips(spark, corpus):
         del client.send_command
         gc.enable()
     assert 0 < calls <= 500, calls
+
+
+@pytest.mark.parametrize("salt", [16, 64])
+def test_salt_reaches_most_partitions(spark, kernel_tasks, sql_conf, salt):
+    """The salt spreads N >> P rows over (nearly) all P kernel partitions.
+    Keying a shuffle on ``pmod(hash, P)`` hashes only P distinct values a
+    second time and left many partitions empty (P=64 reached 41), each
+    still a Python task; AQE coalescing is off here so every partition
+    shows."""
+    sql_conf("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    started, fed = kernel_tasks
+    docs = corpus_to_df(spark, gen_corpus(400, seed=13))
+    extract_spans_df(docs, salt_partitions=salt).collect()
+    assert started.value == salt
+    assert fed.value >= 0.9 * salt, (fed.value, salt)

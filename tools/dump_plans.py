@@ -87,11 +87,22 @@ def main():
     def tree_count(op: str, n: int):
         # count in the plan TREE only (the detail appendix repeats nodes)
         return lambda t: t.split("\n\n(1)")[0].count(op) == n
+
+    def rebalance_feeds_kernel(ftext: str) -> bool:
+        # the node right below MapInPandas is an Exchange whose detail
+        # entry is a rebalance on exactly (doc_id, chunk_id)
+        below = re.search(r"MapInPandas \(\d+\)\n\s*\+- Exchange \((\d+)\)",
+                          ftext.split("\n\n(1)")[0])
+        return below is not None and re.search(
+            rf"\n\({below.group(1)}\) Exchange\n[^\n]*\nArguments: "
+            r"hashpartitioning\(doc_id#\d+, chunk_id#\d+, \d+\), "
+            r"REBALANCE_PARTITIONS_BY_COL,", ftext) is not None
     add("full extraction pipeline — one stream, one kernel call per chunk "
         "row", pipe, [
         ("exactly one Arrow-batched kernel (MapInPandas)",
          tree_count("MapInPandas", 1)),
-        ("salted exchange before the kernel", r"hashpartitioning\(pmod"),
+        ("salt is a rebalance on (doc_id, chunk_id) right below the kernel "
+         "(AQE may coalesce and split it)", rebalance_feeds_kernel),
         ("nothing persisted (no InMemoryRelation)",
          lambda t: "InMemoryRelation" not in t),
         ("span chunks built in-row (no Window)", lambda t: "Window" not in t),

@@ -58,7 +58,7 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--buckets", type=int, default=64,
                     help="checkpoint buckets (resume granularity)")
     ap.add_argument("--salt-partitions", type=int, default=None,
-                    help="salt shuffle width (default: shuffle.partitions)")
+                    help="initial salt rebalance width (default: no salt)")
     ap.add_argument("--no-resume", action="store_true",
                     help="reprocess every bucket even if manifested")
     args = ap.parse_args(argv)
